@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
+import graft.core.Json
 
 /** Headline benchmark: times every registered query at
   * SPARK_GRAFT_SF_DIR and prints ONE JSON metric line (last line of
@@ -284,7 +285,7 @@ object Bench {
     * shape preserved; BenchSpec pins both). */
   def envJson(env: Seq[(String, String)]): String =
     if (env.isEmpty) ""
-    else env.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
+    else env.map { case (k, v) => Json.str(k) + ":" + Json.str(v) }
       .mkString(",\"env\":{", ",", "}")
 
   /** The live env block for this process: scratch dir as resolved by
@@ -462,24 +463,7 @@ object Bench {
     // default must match the measurement protocol.
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = graft.core.SessionTuning.configure(graft.core.LocalDirs.configure(SparkSession.builder()))
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Spark 4.1's union-preserves-partitioning feature zips co-partitioned
-      // union children; a memoized frame whose AQE-materialized partition
-      // count diverges from its claimed partitioning crashes the zip
-      // (q233 hot at clone10) -- keep the sound concatenating Union
-      .config("spark.sql.unionOutputPartitioning", "false")
-      // the default 100-entry codegen-class LRU thrashes under a
-      // 130-query board: the r13 persweep instrument measured ~1985
-      // recompilations in EVERY sweep, not just the first — size the
-      // cache to the workload, as a long-lived service would
-      // (sweep 2+3 compile deltas drop to ~80 with this set)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = graft.core.Session.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Registration order keeps each query family contiguous (the old
     // HashMap iteration interleaved families arbitrarily), and each

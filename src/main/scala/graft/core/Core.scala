@@ -134,15 +134,19 @@ object SessionTuning {
   val defaults: Seq[(String, String)] =
     Seq("spark.shuffle.sort.bypassMergeThreshold" -> "0")
 
-  /** `SPARK_GRAFT_SQLCONF=k=v;k=v` — experiment/deployment overrides. */
-  def overrides(): Seq[(String, String)] =
-    sys.env.get("SPARK_GRAFT_SQLCONF").toSeq
-      .flatMap(_.split(";"))
-      .map(_.trim).filter(s => s.nonEmpty && s.contains("="))
+  /** `k=v;k=v` → pairs: split on `;`, then on the first `=` of each
+    * segment; blank segments and segments without `=` are dropped. */
+  def parse(s: String): Seq[(String, String)] =
+    s.split(";").toSeq
+      .map(_.trim).filter(seg => seg.nonEmpty && seg.contains("="))
       .map { kv =>
         val i = kv.indexOf('=')
         (kv.take(i).trim, kv.drop(i + 1).trim)
       }
+
+  /** `SPARK_GRAFT_SQLCONF=k=v;k=v` — experiment/deployment overrides. */
+  def overrides(): Seq[(String, String)] =
+    sys.env.get("SPARK_GRAFT_SQLCONF").toSeq.flatMap(parse)
 
   /** Effective (key, value) list: defaults first, overrides last (a
     * later `.config` call wins in the builder). */
@@ -150,6 +154,21 @@ object SessionTuning {
 
   def configure(b: SparkSession.Builder): SparkSession.Builder =
     effective().foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+}
+
+object Json {
+  /** A JSON string literal: backslash, quote and every control char
+    * below 0x20 escaped — a tab or CR in a rendered value would
+    * otherwise make the consumer's JSON parse fail. */
+  def str(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }
 
 /** One operator query: a Spark plan + (optionally) DuckDB oracle SQL

@@ -3329,7 +3329,7 @@ object LlmText {
         |FROM s JOIN cum ON cum.source = s.source AND cum.ttr = s.ttr
         |       JOIN n ON n.source = s.source
         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      percentileNorm(s, dir, usePersist = false)
+      percentileNorm(s, dir)
     },
 
     // ---- Contamination attribution (round 16 — the WHICH question
@@ -4290,26 +4290,24 @@ object LlmText {
   /** (doc_id, pos, gh): every k-window's 64-bit hash, 1-based window
     * start — the candidate stream of the whole substring family
     * (q221's seed, q233's probe/index sides). */
-  private[graft] def gramHashes(documents: DataFrame, k: Int,
-      rolling: Boolean = true): DataFrame =
+  private[graft] def gramHashes(documents: DataFrame, k: Int): DataFrame =
     documents
       .select(col("doc_id"),
         posexplode(graft.plans.TextKernels.windowHashes(
-          graft.plans.TextKernels.tokenHashes(lower(col("text"))), k, rolling)))
+          graft.plans.TextKernels.tokenHashes(lower(col("text"))), k)))
       .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"),
         col("col").as("gh"))
 
-  private[graft] def substringDedupSpans(documents: DataFrame, k: Int,
-      rolling: Boolean = true): DataFrame = {
+  private[graft] def substringDedupSpans(documents: DataFrame, k: Int): DataFrame = {
     val tl = documents.select(col("doc_id"), tokens(col("text")).as("t"))
     // in-row candidate hash stream via the COMPILED WindowHashes
     // kernel (an HOF transform+slice+concat formulation measured
     // 2.35 s cold here — CodegenFallback, the q166 trap; the kernel
     // emits n−k+1 full-window 64-bit hashes over the TokenHashes
-    // stream in one codegen'd projection; the `rolling` arm choice is
-    // the kernel's — see WindowHashes' scaladoc for the WindowAb
-    // numbers). posexplode's 0-based array index IS window start − 1.
-    val g = gramHashes(documents, k, rolling)
+    // stream in one codegen'd projection — see WindowHashes' scaladoc
+    // for the hash choice). posexplode's 0-based array index IS window
+    // start − 1.
+    val g = gramHashes(documents, k)
     val dupHash = g.groupBy("gh")
       .agg(countDistinct("doc_id").as("nd")).filter(col("nd") >= 2)
       .select("gh")
@@ -4514,17 +4512,13 @@ object LlmText {
         Seq("doc_id", "span_start", "span_len", "span_md5"), "left_anti")
   }
 
-  /** q205 body, persist-parameterized for the round-18 TripleAb
-    * adjudication (VERDICT r17 #1): the ADVICE-r16 persist landed
-    * unmeasured and q205 became a >2× board mover. Three consumers
-    * read the narrow (doc_id, source, ttr) projection; whether
-    * caching it beats recomputing the qualityStats kernel per
-    * consumer is a MEASURED decision (the q133 counter-example: an
-    * InMemoryRelation changes the optimizer's size evidence). The
-    * registered query pins the winning arm; `tools.PersistAb` runs
-    * both arms interleaved in one session. */
-  private[graft] def percentileNorm(s: SparkSession, dir: String,
-      usePersist: Boolean): DataFrame = {
+  /** q205 body. Three consumers read the narrow (doc_id, source, ttr)
+    * projection, recomputed per consumer rather than persisted: the
+    * ADVICE-r16 persist made q205 a >2× board mover (VERDICT r17 #1),
+    * and the round-18 interleaved A/B kept the unpersisted form (the
+    * q133 counter-example: an InMemoryRelation changes the optimizer's
+    * size evidence). */
+  private[graft] def percentileNorm(s: SparkSession, dir: String): DataFrame = {
     val st = graft.plans.TextKernels.qualityStats(lower(col("text")))
     val base = docs(s, dir)
       .select(col("doc_id"), col("source"), st.as("st"))
@@ -4533,16 +4527,13 @@ object LlmText {
       .filter(col("nt") > 0)
       .select(col("doc_id"), col("source"),
         expr("(1000000 * nd) div nt").cast("long").as("ttr"))
-    val scored = if (usePersist) {
-      val p = base.persist(); graft.Caches.registerPersisted(p); p
-    } else base
-    val h = scored.groupBy("source", "ttr").agg(count(lit(1)).as("c"))
+    val h = base.groupBy("source", "ttr").agg(count(lit(1)).as("c"))
     val below = h.withColumn("below",
       sum("c").over(Window.partitionBy("source").orderBy("ttr")) - col("c"))
     // per-source totals fold over the VALUE-BOUNDED histogram, not the
-    // corpus — one fewer corpus pass in the unpersisted form (r18)
+    // corpus — one fewer corpus pass (r18)
     val n = h.groupBy("source").agg(sum("c").as("n"))
-    scored
+    base
       .join(below.select("source", "ttr", "below"), Seq("source", "ttr"))
       .join(broadcast(n), "source")
       .select(col("doc_id"), col("source"), col("ttr").as("ttr_micro"),

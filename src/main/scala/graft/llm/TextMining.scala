@@ -2952,7 +2952,7 @@ object TextMining {
         |       (1000::HUGEINT * (conc - disc) * 2
         |        // NULLIF(n.n::HUGEINT * (n.n - 1), 0))::BIGINT AS tau_milli
         |FROM n JOIN cd USING (source) ORDER BY source""".stripMargin) { (s, dir) =>
-      signalConcordance(s, dir, usePersist = false)
+      signalConcordance(s, dir)
     },
 
     // ---- blocklist census (round 18): the dirty-lexicon scan every
@@ -3074,16 +3074,12 @@ object TextMining {
       .orderBy("doc_id")
   }
 
-  /** q210 body, persist-parameterized for the round-18 TripleAb
-    * adjudication (VERDICT r17 #1): the ADVICE-r16 persist landed
-    * unmeasured and q210 became the board's biggest mover (0.68 →
-    * 2.18 s, flat across sweeps). Four consumers read the narrow
-    * (doc_id, source, x, y) projection; whether caching beats
-    * recomputing the qualityStats kernel per consumer is a MEASURED
-    * decision. The registered query pins the winning arm;
-    * `tools.PersistAb` runs both arms interleaved in one session. */
-  private[graft] def signalConcordance(s: SparkSession, dir: String,
-      usePersist: Boolean): DataFrame = {
+  /** q210 body. Four consumers read the narrow (doc_id, source, x, y)
+    * projection, recomputed per consumer rather than persisted: the
+    * ADVICE-r16 persist made q210 the board's biggest mover (0.68 →
+    * 2.18 s, flat across sweeps; VERDICT r17 #1), and the round-18
+    * interleaved A/B kept the unpersisted form. */
+  private[graft] def signalConcordance(s: SparkSession, dir: String): DataFrame = {
     val st = graft.plans.TextKernels.qualityStats(lower(col("text")))
     val base = docs(s, dir)
       .select(col("doc_id"), col("source"), st.as("st"))
@@ -3092,15 +3088,12 @@ object TextMining {
       .filter(col("nt") > 0)
       .select(col("doc_id"), col("source"), col("nt").as("x"),
         expr("(1000000 * nd) div nt").cast("long").as("y"))
-    val sdf =
-      if (usePersist) { val p = base.persist(); graft.Caches.registerPersisted(p); p }
-      else base
     // histograms are the ONLY corpus-scale aggregations; everything
     // else (per-source n, both decile maps) folds over these
-    // value-bounded frames — 3 corpus passes total in the unpersisted
-    // form (hx + hy + the cells join), the structural minimum (r18)
-    val hx = sdf.groupBy("source", "x").agg(count(lit(1)).as("c"))
-    val hy = sdf.groupBy("source", "y").agg(count(lit(1)).as("c"))
+    // value-bounded frames — 3 corpus passes total (hx + hy + the
+    // cells join), the structural minimum (r18)
+    val hx = base.groupBy("source", "x").agg(count(lit(1)).as("c"))
+    val hy = base.groupBy("source", "y").agg(count(lit(1)).as("c"))
     val n = hx.groupBy("source").agg(sum("c").as("n"))
       def decileMap(sig: String, h: DataFrame): DataFrame = {
         h.withColumn("below",
@@ -3109,7 +3102,7 @@ object TextMining {
           .select(col("source"), col(sig),
             expr("(10 * below) div n").cast("long").as(s"d$sig"))
       }
-      val cells = sdf
+      val cells = base
         .join(decileMap("x", hx), Seq("source", "x"))
         .join(decileMap("y", hy), Seq("source", "y"))
         .groupBy("source", "dx", "dy").agg(count(lit(1)).as("c"))

@@ -684,8 +684,8 @@ object Analytics {
 
   /** The adaptive-cell prune pass: (p_partkey, pc, sz) in, the
     * certainly-not-dominated candidate band out. Factored from
-    * `skyline` so AnalyticsSweep can measure the PRUNE RATE
-    * (|candidates| / |input|) per fixture directly.
+    * `skyline` so the PRUNE RATE (|candidates| / |input|) can be
+    * measured per fixture directly.
     *
     * Shape at 100 TB: the probe is one sketch aggregate (partial-
     * combined, ≤ cells values collected); the bound table is

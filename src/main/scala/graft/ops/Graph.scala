@@ -537,8 +537,8 @@ object Graph {
     * VERDICT r13 item 3). The plain self-join `items ⋈ items ON k,
     * p < p` is per-key quadratic: ONE task materializes C(M,2) rows
     * for a customer holding M distinct parts, so a single 10⁴-item
-    * basket squares inside one task while 31 cores idle (BasketSweep
-    * measures the cliff). Hedge: tag each row with its basket size
+    * basket squares inside one task while 31 cores idle (a basket-size
+    * sweep measured the cliff). Hedge: tag each row with its basket size
     * via a window count (same k-shuffle the join needs anyway);
     * baskets ≤ `threshold` take the direct join unchanged, baskets
     * above it are bucket-tiled — slice each item by hash(p) mod S,

@@ -84,7 +84,7 @@ object TextKernels {
   def slidingChunkHashes(hs: Column, len: Int, stride: Int): Column =
     column(ChunkHashes(expression(hs), len, stride))
 
-  /** Full 64-bit FNV-1a window hashes of a token-hash array: one hash
+  /** Full 64-bit rolling window hashes of a token-hash array: one hash
     * per FULL k-window (n−k+1 entries; no trailing partials — q221's
     * gram positions are exactly the array indices + 1). 64-bit where
     * [[ChunkHashes]] is mod-M: the substring-dedup CANDIDATE stage
@@ -94,8 +94,8 @@ object TextKernels {
     * a full recompute; 64 bits keeps candidate inflation negligible
     * (collisions still die in the verify stage — seeds are never
     * trusted). */
-  def windowHashes(hs: Column, k: Int, rolling: Boolean = true): Column =
-    column(WindowHashes(expression(hs), k, rolling))
+  def windowHashes(hs: Column, k: Int): Column =
+    column(WindowHashes(expression(hs), k))
 
   /** Per-profile stopword-occurrence counts of a (pre-lowercased)
     * text: array<long>, one count per profile, in profile order. */
@@ -401,28 +401,23 @@ case class RepetitionStats(child: Expression) extends UnaryExpression {
   * seed property. Null elements hash as 0 (unreachable from
   * [[TokenHashes]], containsNull=false).
   *
-  * Two arms (round 19, VERDICT r18 item 3 — a MEASURED choice):
-  *   - `rolling = false`: a fresh FNV-1a fold per window, O(n·k).
-  *   - `rolling = true`: the polynomial rolling hash
-  *     h_i = Σ_j e_{i+j}·B^{k−1−j} mod 2⁶⁴ (B = the FNV prime, odd so
-  *     multiplication is a bijection mod 2⁶⁴), advanced in O(1) per
-  *     window: h_{i+1} = (h_i − e_i·B^{k−1})·B + e_{i+k} — O(n) total.
-  *     No output finalizer: the inputs are already avalanche-mixed
-  *     64-bit [[TokenHashes]], and the value is only ever compared
-  *     for equality (collisions die in q221's exact gram-text
-  *     verify).
-  * The two arms produce DIFFERENT hash values — only the candidate
-  * sets differ (both supersets of truth); the verified span output is
-  * identical (SubstringDedupSpec pins arm equivalence; WindowAb
-  * asserts equal span counts). WindowAb measured the span-family
-  * build interleaved, cold medians: sf0.1 FNV 1.11 s vs rolling
-  * 1.02 s (5 rounds), clone100 FNV 14.32 s vs rolling 13.84 s (3
-  * rounds; 500k spans) — the fold is a small slice of a candidate-
-  * join-dominated build at k=8, but the rolling arm reads
+  * The hash is the polynomial rolling hash
+  * h_i = Σ_j e_{i+j}·B^{k−1−j} mod 2⁶⁴ (B = the FNV prime, odd so
+  * multiplication is a bijection mod 2⁶⁴), advanced in O(1) per
+  * window: h_{i+1} = (h_i − e_i·B^{k−1})·B + e_{i+k} — O(n) total.
+  * No output finalizer: the inputs are already avalanche-mixed 64-bit
+  * [[TokenHashes]], and the value is only ever compared for equality
+  * (collisions die in q221's exact gram-text verify).
+  *
+  * A MEASURED choice (round 19, VERDICT r18 item 3) over a fresh
+  * FNV-1a fold per window, O(n·k): the span-family build interleaved,
+  * cold medians, sf0.1 FNV 1.11 s vs rolling 1.02 s (5 rounds),
+  * clone100 FNV 14.32 s vs rolling 13.84 s (3 rounds; 500k spans),
+  * with equal span counts — the fold is a small slice of a candidate-
+  * join-dominated build at k=8, but the rolling hash reads
   * directionally faster at both scales and is strictly less work per
-  * token at any k, so it ships as [[TextKernels.windowHashes]]'s
-  * default (the FNV arm stays as the A/B baseline). */
-case class WindowHashes(child: Expression, k: Int, rolling: Boolean = true)
+  * token at any k. */
+case class WindowHashes(child: Expression, k: Int)
     extends UnaryExpression {
   require(k >= 1, s"k=$k must be positive")
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -438,33 +433,19 @@ case class WindowHashes(child: Expression, k: Int, rolling: Boolean = true)
     if (n < k) return new GenericArrayData(Array.emptyLongArray)
     val out = new Array[Long](n - k + 1)
     @inline def e(j: Int): Long = if (in.isNullAt(j)) 0L else in.getLong(j)
-    if (rolling) {
-      val B = 0x100000001b3L
-      var btop = 1L // B^(k−1) mod 2⁶⁴
-      var t = 1
-      while (t < k) { btop *= B; t += 1 }
-      var h = 0L
-      var j = 0
-      while (j < k) { h = h * B + e(j); j += 1 }
-      out(0) = h
-      var i = 1
-      while (i + k <= n) {
-        h = (h - e(i - 1) * btop) * B + e(i + k - 1)
-        out(i) = h
-        i += 1
-      }
-    } else {
-      var i = 0
-      while (i + k <= n) {
-        var h = 0xcbf29ce484222325L
-        var j = i
-        while (j < i + k) {
-          h = (h ^ e(j)) * 0x100000001b3L
-          j += 1
-        }
-        out(i) = h
-        i += 1
-      }
+    val B = 0x100000001b3L
+    var btop = 1L // B^(k−1) mod 2⁶⁴
+    var t = 1
+    while (t < k) { btop *= B; t += 1 }
+    var h = 0L
+    var j = 0
+    while (j < k) { h = h * B + e(j); j += 1 }
+    out(0) = h
+    var i = 1
+    while (i + k <= n) {
+      h = (h - e(i - 1) * btop) * B + e(i + k - 1)
+      out(i) = h
+      i += 1
     }
     new GenericArrayData(out)
   }

@@ -20,7 +20,7 @@ import org.apache.spark.sql.streaming.GroupState
   * would buffer the stream; here each record folds into one of
   * [[NBuckets]] per-bucket bottom-k sets of ≤ [[K]] entries — state
   * is NBuckets·K scalars FOREVER, independent of stream length (the
-  * StateSweep property by construction), and the final sample is the
+  * bounded-state property by construction), and the final sample is the
   * k smallest across buckets, a ≤ NBuckets·K-row presentation step.
   * At 100 TB/day the same topology holds: buckets scale with
   * parallelism, each holds k values, and the merge is trivial.

@@ -11,7 +11,7 @@ import org.apache.spark.sql.streaming.GroupState
   * keeps one state row PER DISTINCT KEY — unbounded on a 100 TB/day
   * stream. Here state is [[NBuckets]] Misra–Gries maps of ≤ [[Cap]]
   * entries each — a few thousand rows FOREVER, independent of stream
-  * length or key cardinality (the StateSweep property, by
+  * length or key cardinality (the bounded-state property, by
   * construction). Keys hash to exactly one bucket, so a key's whole
   * frequency mass lands in one sketch, and the classic guarantee
   * applies per bucket: any key with bucket-frequency > n_b/(Cap+1)

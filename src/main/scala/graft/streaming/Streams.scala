@@ -344,7 +344,7 @@ object Streams {
     // can never match a future purchase and is evicted, so state is
     // (rate × horizon), not the whole history — the property that
     // makes this run forever at 100 TB/day. MEASURED, not narrated
-    // (graft.tools.StateSweep, README "state-growth sweep"): state
+    // (README "state-growth sweep"): state
     // plateaus at ~4.1k rows per batch at 1x rate and ~40.8k at 10x —
     // flat across micro-batches, exactly rate-proportional, while the
     // stream's cumulative history grows 10 files deep. Append mode: rows emit

@@ -1,24 +1,27 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import graft.core.{Q, SessionTuning}
 
-/** Generic isolated-median probe — the repo's established regression
-  * triage protocol (GraphProbe for q109/q113, StreamProbe for the
-  * streaming trio, Q101Probe for BM25), generalized to ANY registered
-  * query so a fresh sweep regression (BENCH_r11: q107 0.21 → 0.91 s,
-  * 4.28×, with zero r11 change to `ingest/JsonlSource.scala`) gets an
+/** Isolated-median probe and interleaved A/B for ANY registered query,
+  * so a fresh sweep regression (BENCH_r11: q107 0.21 → 0.91 s, 4.28×,
+  * with zero r11 change to `ingest/JsonlSource.scala`) gets an
   * isolated number without a bespoke tool per query.
   *
-  * Protocol matches GraphProbe: page-cache warmup of every table, then
-  * per run `Caches.releaseAll` (the bench's between-sweep state) before
-  * a COLD timing and a HOT timing in the same session. The isolated
-  * cold median is directly comparable to the sweep's per-query median;
-  * a cold median at the previous round's level names the regression
+  * Protocol: page-cache warmup of every table, then per run
+  * `Caches.releaseAll` (the bench's between-sweep state) before a COLD
+  * timing and a HOT timing in the same session. The isolated cold
+  * median is directly comparable to the sweep's per-query median; a
+  * cold median at the previous round's level names the regression
   * "sweep context load", a raised one names the query itself.
   *
   * Usage:
-  *   `runMain graft.tools.QueryProbe q107,q109 [sfDir] [runs]`
-  *     (query prefixes or full names; defaults /root/testdata/sf0.1, 5)
+  *   `runMain graft.tools.QueryProbe q107,q109 [sfDir] [runs] [--arm 'k=v;k=v']...`
+  *     (query prefixes or full names; defaults: the sf0.1 fixture, 5 runs).
+  *     Each repeatable `--arm` is one runtime-conf arm in
+  *     `SPARK_GRAFT_SQLCONF` syntax; arms run interleaved within every
+  *     run so ambient host noise hits them equally, and the output is
+  *     per-arm medians (see [[probe]]).
   *   `runMain graft.tools.QueryProbe --flagged [sfDir] [runs] [detail] [commitTag]`
   *     batch anchor-refresh mode (round 19, VERDICT r18 item 6: nine
   *     stale fast-flags needed four manual chunk sessions in r18) —
@@ -57,22 +60,55 @@ object QueryProbe {
       commit: String, calib: String): String =
     f"""  "$name": {%n   "cold": $cold%.2f,%n   "hot": $hot%.2f,%n   "commit": "$commit",%n   "calib": "$calib"%n  }"""
 
-  def main(args: Array[String]): Unit = {
+  /** `--arm X` pairs pulled out of the argument list: (arms, positional). */
+  @annotation.tailrec
+  def splitArms(as: List[String], arms: Vector[String] = Vector.empty,
+      pos: Vector[String] = Vector.empty): (Vector[String], Vector[String]) = as match {
+    case "--arm" :: a :: rest => splitArms(rest, arms :+ a, pos)
+    case x :: rest => splitArms(rest, arms, pos :+ x)
+    case Nil => (arms, pos)
+  }
+
+  /** One query's timings under one arm (`""` = the session as built). */
+  final case class Probe(arm: String, cold: Vector[Double], hot: Vector[Double])
+
+  private def time(spark: SparkSession, sfDir: String, q: Q): Double = {
+    val t0 = System.nanoTime()
+    q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** `runs` interleaved rounds: in each, every arm in turn sets its keys
+    * with `spark.conf.set`, releases the family caches, times a cold
+    * and a hot run, and restores the keys it set. */
+  def probe(spark: SparkSession, sfDir: String, q: Q, runs: Int,
+      arms: Seq[String]): Seq[Probe] = {
+    val cold = arms.map(_ => Vector.newBuilder[Double])
+    val hot = arms.map(_ => Vector.newBuilder[Double])
+    for (_ <- 1 to runs; (arm, i) <- arms.zipWithIndex) {
+      val kvs = SessionTuning.parse(arm)
+      val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      try {
+        kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+        graft.Caches.releaseAll(spark)
+        cold(i) += time(spark, sfDir, q)
+        hot(i) += time(spark, sfDir, q)
+      } finally saved.reverse.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    arms.indices.map(i => Probe(arms(i), cold(i).result(), hot(i).result()))
+  }
+
+  def main(argv: Array[String]): Unit = {
+    val (armArgs, args) = splitArms(argv.toList)
     val flaggedMode = args.headOption.contains("--flagged")
+    require(!(flaggedMode && armArgs.nonEmpty), "--flagged takes no --arm")
+    val arms = if (armArgs.isEmpty) Seq("") else armArgs
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val runs = args.lift(2).map(_.toInt).getOrElse(5)
-    val spark = graft.core.SessionTuning.configure(graft.core.LocalDirs.configure(SparkSession.builder())).master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Spark 4.1's union-preserves-partitioning feature zips co-partitioned
-      // union children; a memoized frame whose AQE-materialized partition
-      // count diverges from its claimed partitioning crashes the zip
-      // (q233 hot at clone10) -- keep the sound concatenating Union
-      .config("spark.sql.unionOutputPartitioning", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000") // match Bench r13
-      .getOrCreate()
+    val spark = graft.core.Session.builder("32").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val selected =
@@ -88,7 +124,7 @@ object QueryProbe {
         val wanted = args.headOption
           .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
           .getOrElse(sys.error(
-            "usage: QueryProbe q107[,q109...]|--flagged [sfDir] [runs]"))
+            "usage: QueryProbe q107[,q109...]|--flagged [sfDir] [runs] [--arm 'k=v;k=v']..."))
         graft.SparkEntry.all.filter(q =>
           wanted(q.name) || wanted(q.name.takeWhile(_ != '_')))
       }
@@ -98,11 +134,6 @@ object QueryProbe {
     }
     require(selected.nonEmpty, "no query matches the request")
 
-    def time(q: graft.core.Q): Double = {
-      val t0 = System.nanoTime()
-      q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
     // page-cache warmup (Bench does the same before timing)
     graft.core.T.names.foreach { t =>
       graft.core.T.df(spark, sfDir, t).write.format("noop").mode("overwrite").save()
@@ -112,19 +143,12 @@ object QueryProbe {
     val (h0, s0) = graft.Bench.calibrate(spark)
     println(f"calib pre: hash $h0%.3f s  spark $s0%.3f s")
     val results = Vector.newBuilder[(String, Double, Double)]
-    for (q <- selected) {
-      val cold = Vector.newBuilder[Double]
-      val hot = Vector.newBuilder[Double]
-      for (_ <- 1 to runs) {
-        graft.Caches.releaseAll(spark) // the bench's between-sweep state
-        cold += time(q)
-        hot += time(q)
-      }
-      val (c, h) = (cold.result(), hot.result())
-      def med(xs: Vector[Double]) = graft.Bench.median(xs)
+    def med(xs: Vector[Double]) = graft.Bench.median(xs)
+    for (q <- selected; Probe(arm, c, h) <- probe(spark, sfDir, q, runs, arms)) {
       results += ((q.name.takeWhile(_ != '_'), med(c), med(h)))
       println(f"${q.name}%-26s cold median ${med(c)}%5.2f s  hot median ${med(h)}%5.2f s" +
-        f"  (cold [${c.min}%.2f,${c.max}%.2f] hot [${h.min}%.2f,${h.max}%.2f])")
+        f"  (cold [${c.min}%.2f,${c.max}%.2f] hot [${h.min}%.2f,${h.max}%.2f])" +
+        (if (arm.isEmpty) "" else s"  arm $arm"))
     }
     val (h1, s1) = graft.Bench.calibrate(spark)
     println(f"calib post: hash $h1%.3f s  spark $s1%.3f s")

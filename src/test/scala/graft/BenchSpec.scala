@@ -360,9 +360,26 @@ class BenchSpec extends SparkSpec {
     assert(!bare.contains("\"env\""), bare)
   }
 
+  test("env values with quote, backslash and tab stay parseable and round-trip") {
+    import org.json4s._
+    val raw = "a\"b\\c\td"
+    val line = Bench.metricLine("/sf", 3, Seq("q1_agg" -> Seq(1.0)),
+      Map.empty, Nil, Nil, Nil, None, env = Seq("sqlconf" -> raw))
+    val lp = org.json4s.jackson.JsonMethods.parse(line)
+    assert(lp \ "env" \ "sqlconf" == JString(raw), line)
+  }
+
   test("SessionTuning parses SPARK_GRAFT_SQLCONF-shaped override strings") {
-    // the parser itself is env-driven; pin the defaults list shape so a
-    // default can never land without a value (silent builder no-op)
+    import graft.core.SessionTuning.parse
+    assert(parse("a=1;b=2") == Seq("a" -> "1", "b" -> "2"))
+    // split on the first '=' only; keys and values are trimmed
+    assert(parse(" k = x=y=z ") == Seq("k" -> "x=y=z"))
+    // blank and whitespace-only segments vanish
+    assert(parse(";; a=1 ;  ;") == Seq("a" -> "1"))
+    assert(parse("") == Nil)
+    // a segment with no '=' is dropped, its neighbours kept
+    assert(parse("a=1;junk;b=2") == Seq("a" -> "1", "b" -> "2"))
+    // a default can never land without a value (silent builder no-op)
     assert(graft.core.SessionTuning.defaults.forall { case (k, v) =>
       k.nonEmpty && v.nonEmpty })
   }

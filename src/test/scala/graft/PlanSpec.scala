@@ -1,5 +1,12 @@
 package graft
 
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+
+/** Plan walks that descend through adaptive query stages. */
+private object Aqe extends AdaptiveSparkPlanHelper
+
 /** Physical-plan regression pins: the properties that make these plans
   * scale-correct must stay visible in explain output — losing one is a
   * silent 100× regression at the target scale, invisible at sf0.001. */
@@ -1405,34 +1412,56 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  /** Every InMemoryTableScanExec in `p`, including those nested in
+    * another cached frame's plan. */
+  private def cachedScans(p: SparkPlan): Seq[InMemoryTableScanExec] =
+    Aqe.collectWithSubqueries(p) { case m: InMemoryTableScanExec => m }
+      .flatMap(m => m +: cachedScans(m.relation.cachedPlan))
+
+  private val CorpusSide = """NOT \(\(doc_id#\d+L? % 10\) = 0\)""".r
+
+  /** The memoized corpusGrams signature: a node running the gram
+    * kernel over a documents scan filtered to the pre-delta corpus. */
+  private def corpusGramsShape(cached: SparkPlan): Boolean =
+    Aqe.find(cached) { n =>
+      n.expressions.exists(_.exists(_.isInstanceOf[plans.WindowHashes])) &&
+        Aqe.find(n) {
+          case f: FilterExec =>
+            CorpusSide.findFirstIn(f.condition.toString).isDefined &&
+              Aqe.find(f) {
+                case sc: FileSourceScanExec =>
+                  sc.relation.location.rootPaths.exists(_.getName == "documents.parquet")
+                case _ => false
+              }.isDefined
+          case _ => false
+        }.isDefined
+    }.isDefined
+
   test("q238: BOTH substring artifacts read from disk catalog tables") {
     // the complete ingest-cycle frame: no in-session state from
     // "yesterday" — gram index AND span set are persisted tables
     val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val p = plan("q238_substring_incremental_artifacts")
+      val ep = SparkEntry.queries("q238_substring_incremental_artifacts")(spark, dir)
+        .queryExecution.executedPlan
+      val p = ep.toString
       assert(p.contains("graft_gram_index_"),
         s"gram side not reading the catalog bucket table:\n$p")
       assert(p.contains("graft_span_index_"),
         s"span side not reading the catalog table:\n$p")
       assert(p.contains("Bucketed: true"),
         s"no bucket-aligned scan in the plan:\n$p")
-      // The original belt-and-braces ban on ANY InMemoryTableScan is
-      // gone (round 22): newSpansFromDelta now persists its PER-CYCLE
-      // intermediates (cand/withText/newVer — each fed two consumers,
-      // so the bucket probe and the gram-text exchange ran twice), and
-      // those are delta-derived frames an ingest cycle legitimately
-      // recomputes from the disk artifacts, not "yesterday's state".
-      // The memo stand-ins the ban guarded against are still excluded
-      // by the two table-name asserts above: had corpusGrams /
-      // corpusSpans leaked back in, the graft_gram_index_ /
-      // graft_span_index_ scans would be absent. Pin instead that the
-      // per-cycle caches are the ONLY in-memory frames: each renders
-      // its cached lineage rooted at the disk scans, never at a
-      // documents-scan of the CORPUS side with the gram kernel (the
-      // memoized corpusGrams signature: xxhash64 windows over a
-      // NOT((doc_id % 10) = 0) documents scan feeding an IMR).
+      // newSpansFromDelta's per-cycle caches (cand/withText/newVer) are
+      // in-memory frames; none of them may be the memoized corpusGrams
+      // frame. q233, which reads that memo, is the control that the
+      // signature check binds.
+      val memo = cachedScans(SparkEntry.queries("q233_substring_incremental")(spark, dir)
+        .queryExecution.executedPlan)
+      assert(memo.exists(m => corpusGramsShape(m.relation.cachedPlan)),
+        "corpusGrams signature no longer matches q233's memo frame")
+      val leaked = cachedScans(ep).filter(m => corpusGramsShape(m.relation.cachedPlan))
+      assert(leaked.isEmpty, s"q238 reads the corpusGrams memo:\n$p")
       assert(!p.contains("CartesianProduct"), p)
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)

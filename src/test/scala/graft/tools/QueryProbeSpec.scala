@@ -1,12 +1,10 @@
 package graft.tools
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** The `--flagged` batch anchor-refresh mode's pure pieces (round 19,
   * VERDICT r18 item 6): median extraction from the committed board
   * detail, flag-set recomputation, and patch emission in the exact
-  * shape `Bench.parseAnchors` reads back. */
-class QueryProbeSpec extends AnyFunSuite {
+  * shape `Bench.parseAnchors` reads back; and the `--arm` A/B mode. */
+class QueryProbeSpec extends graft.SparkSpec {
 
   private def read(p: String) =
     new String(java.nio.file.Files.readAllBytes(new java.io.File(p).toPath), "UTF-8")
@@ -64,5 +62,24 @@ class QueryProbeSpec extends AnyFunSuite {
     // q1: >=2x both bounds -> flags; q2 steady; q3 fast-flag (<=0.5x hot)
     val flagged = graft.Bench.anchorFlags(meds, anchors).map(_._1).toSet
     assert(flagged == Set("q1", "q3"), flagged.toString)
+  }
+
+  test("--arm runs interleave, report one median pair per arm, and restore the conf") {
+    val key = "spark.sql.adaptive.enabled"
+    val (arms, pos) = QueryProbe.splitArms(
+      List("q1", "--arm", s"$key=true", "/sf", "--arm", s"$key=false"))
+    assert(arms == Vector(s"$key=true", s"$key=false"))
+    assert(pos == Vector("q1", "/sf"))
+    val before = spark.conf.getOption(key)
+    val q1 = graft.SparkEntry.all.find(_.name == "q1_agg").get
+    // record the value each timed run saw: cold+hot per arm, arms in turn
+    val seen = Vector.newBuilder[String]
+    val q = q1.copy(run = (s, d) => { seen += s.conf.get(key); q1.run(s, d) })
+    val res = QueryProbe.probe(spark, "/root/testdata/sf0.001", q, 2, arms)
+    assert(res.map(_.arm) == arms)
+    assert(res.forall(p => p.cold.size == 2 && p.hot.size == 2 &&
+      (p.cold ++ p.hot).forall(_ > 0)), res)
+    assert(seen.result() == Vector.fill(2)(Vector("true", "true", "false", "false")).flatten)
+    assert(spark.conf.getOption(key) == before)
   }
 }
