@@ -503,7 +503,7 @@ object Bench {
     try {
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.expressions.Window
-      val r = spark.read.parquet(s"$sfDir/region.parquet")
+      val r = graft.core.T.df(spark, sfDir, "region")
       r.groupBy(col("r_name"))
         .agg(sum(col("r_regionkey").cast("decimal(12,2)")).as("s"), count(lit(1)).as("c"))
         .join(broadcast(r.select(col("r_name"))), "r_name")

@@ -1,8 +1,25 @@
 package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Fixture-table access + shared helpers.
+  *
+  * Every fixture-table read goes through one JVM-wide schema memo
+  * ([[T.parquet]]). A parquet read without a schema runs one Spark job,
+  * the footer schema inference, each time a plan is built; a read given its
+  * schema only lists the files. An entry is valid for:
+  *  - the table's canonical (qualified) path;
+  *  - the fingerprint of its visible data files, each as (name, length,
+  *    mtime): the path itself for a single file, the part files of a
+  *    Spark-written directory. Fixtures are read-only, so at scale a
+  *    catalog supplies the schema and the memo plays that catalog here;
+  *    a table rewritten in place changes the fingerprint, and the next
+  *    read infers again and replaces the entry (one entry per path);
+  *  - the session's values of the confs that shape parquet schema
+  *    inference (binaryAsString, int96AsTimestamp, inferTimestampNTZ,
+  *    nanosAsLong): the same footer infers a different schema under a
+  *    different value.
   *
   * Oracle determinism rules used across all queries (the driver
   * hash-compares our parquet output against DuckDB running the oracle
@@ -23,7 +40,67 @@ object T {
 
   def df(s: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(s, dir)
-    else s.read.parquet(s"$dir/$name.parquet")
+    else parquet(s, s"$dir/$name.parquet")
+
+  /** A parquet table read with its memoized schema (see [[T]]). On a
+    * miss this is the inferring read, as before; a missing path reads
+    * bare, so it fails as before. */
+  def parquet(s: SparkSession, path: String): DataFrame =
+    resolve(s, path).fold(identity, st => s.read.schema(st).parquet(path))
+
+  /** The memoized schema of a parquet table, for readers that bring
+    * their own source (the streaming gates' landing dirs). */
+  def schema(s: SparkSession, path: String): StructType =
+    resolve(s, path).fold(_.schema, identity)
+
+  private val inferenceConfs = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong")
+
+  private type Fingerprint = Seq[(String, Long, Long)]
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[(String, Seq[Option[String]]), (Fingerprint, StructType)]()
+
+  /** Right(schema) on a hit; on a miss the inferring read, as Left. */
+  private def resolve(s: SparkSession, path: String): Either[DataFrame, StructType] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val root = fs.makeQualified(p)
+    val key = (root.toString, inferenceConfs.map(s.conf.getOption))
+    val files =
+      try Some(fingerprint(fs, root))
+      catch { case _: java.io.FileNotFoundException => None }
+    (files, Option(schemas.get(key))) match {
+      case (Some(f), Some((g, st))) if f == g => Right(st)
+      case _ =>
+        val df = s.read.parquet(path)
+        files.foreach(f => schemas.put(key, (f, df.schema)))
+        Left(df)
+    }
+  }
+
+  /** (name, length, mtime) of every data file Spark would read: the file
+    * itself, or each file under the directory whose relative path has no
+    * component starting with `_` or `.` (Spark's hidden-file rule). */
+  private def fingerprint(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): Fingerprint = {
+    val st = fs.getFileStatus(root)
+    if (st.isFile) Seq((root.getName, st.getLen, st.getModificationTime))
+    else {
+      val prefix = root.toString.stripSuffix("/") + "/"
+      val it = fs.listFiles(root, true)
+      val out = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        val rel = f.getPath.toString.stripPrefix(prefix)
+        if (!rel.split('/').exists(c => c.startsWith("_") || c.startsWith(".")))
+          out += ((rel, f.getLen, f.getModificationTime))
+      }
+      out.result().sorted
+    }
+  }
 
   /** events.ts has shipped in two parquet encodings across testdata
     * generations: TIMESTAMP(NANOS), which Spark's reader does not support
@@ -36,14 +113,18 @@ object T {
     * clock DuckDB sees — values identical in both engines. */
   def events(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = s.read.parquet(s"$dir/events.parquet")
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts",
-          org.apache.spark.sql.functions.col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => raw
+    val raw = parquet(s, s"$dir/events.parquet")
+    normalizeTs(raw.schema, raw)
+  }
+
+  /** [[events]]' `ts` normalization, for a batch or streaming `df` read
+    * with the events schema `raw`, whose `ts` type names the encoding. */
+  def normalizeTs(raw: StructType, df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{col, expr}
+    raw("ts").dataType match {
+      case LongType => df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+      case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
+      case _ => df
     }
   }
 
@@ -183,4 +264,38 @@ object Q {
     Q(name, run, Some(oracle))
   def noOracle(name: String)(run: (SparkSession, String) => DataFrame): Q =
     Q(name, run, None)
+}
+
+/** The Spark jobs a block of driver code starts, by call site. Counts
+  * every job the context runs meanwhile, so it is exact only when
+  * nothing else runs jobs at the same time (a tool, a spec). */
+object Jobs {
+  def during[A](s: SparkSession)(body: => A): (A, Seq[String]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sc = s.sparkContext
+    // (SQL execution id, result-stage name) per job, and each SQL
+    // execution's call site: a job an action runs through AQE starts
+    // on a planner thread, so only its execution names the action
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Option[String], String)]()
+    val execs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add((Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id"))),
+          e.stageInfos.sortBy(_.stageId).lastOption.fold(s"job ${e.jobId}")(_.name)))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => execs.put(x.executionId.toString, x.description)
+        case _ =>
+      }
+    }
+    org.apache.spark.GraftListenerBridge.waitForListeners(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.GraftListenerBridge.waitForListeners(sc)
+      (r, jobs.toArray(Array.empty[(Option[String], String)]).toSeq.map { case (id, stage) =>
+        id.flatMap(i => Option(execs.get(i))).getOrElse(stage)
+      })
+    } finally sc.removeSparkListener(listener)
+  }
 }

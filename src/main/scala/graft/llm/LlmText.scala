@@ -4226,9 +4226,17 @@ object LlmText {
     // while heavy passes are decided; MEMORY_AND_DISK degrades to
     // disk at 100 TB doc counts. The max probe materializes the
     // cache (sequential actions — no concurrent-stage race), and
-    // releaseAll drops it with the other ad-hoc frames.
-    d.persist()
-    graft.Caches.registerPersisted(d)
+    // releaseAll drops it with the other ad-hoc frames. Only an
+    // uncached `d` is persisted here: when a cache already covers it
+    // (the caller's own frame, or a shared memo `d` projects), the
+    // passes read that cache, and registering it would let releaseAll
+    // unpersist a frame this helper does not own. A persisted alias
+    // does not help: the cache lookup matches a column projection of a
+    // cached plan to that plan, so the alias's unpersist drops it too.
+    if (d.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
+      d.persist()
+      graft.Caches.registerPersisted(d)
+    }
     // the max(doc_id) probe reads only that column
     val maxId = Option(d.agg(max("doc_id")).first().get(0))
       .map(_.asInstanceOf[Long]).getOrElse(0L)

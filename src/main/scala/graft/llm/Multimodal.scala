@@ -1617,7 +1617,7 @@ object Multimodal {
         case _: java.nio.file.DirectoryNotEmptyException => rmTree(stage)
       }
     }
-    s.read.parquet(base.toString)
+    graft.core.T.parquet(s, base.toString)
   }
 
   /** doc_id seed for the staged-table writers, widened to the session

@@ -241,20 +241,10 @@ object Streams {
 
   private[streaming] def eventStream(s: SparkSession, dir: String): DataFrame = {
     val landing = stageLanding(dir, "events")
-    // schema from the batch reader; normalize ts to session-zone
-    // TIMESTAMP exactly as T.events does (the testdata has shipped both
-    // TIMESTAMP(NANOS) -> raw long nanos and timestamp[us] -> NTZ, and
-    // watermarks/windows require TimestampType)
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
-    val stream = s.readStream.schema(schema).parquet(landing.toString)
-    schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        stream.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        stream.withColumn("ts",
-          col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => stream
-    }
+    // the fixture's schema; ts normalized to session-zone TIMESTAMP by
+    // the same function as T.events (watermarks/windows require it)
+    val schema = T.schema(s, s"$dir/events.parquet")
+    T.normalizeTs(schema, s.readStream.schema(schema).parquet(landing.toString))
   }
 
   /** Document ingest stream over the staged fixture — the front of the
@@ -262,8 +252,7 @@ object Streams {
     * carry no event time; the gate is stateless per row). */
   private[streaming] def docStream(s: SparkSession, dir: String): DataFrame = {
     val landing = stageLanding(dir, "documents")
-    val schema = s.read.parquet(s"$dir/documents.parquet").schema
-    s.readStream.schema(schema).parquet(landing.toString)
+    s.readStream.schema(T.schema(s, s"$dir/documents.parquet")).parquet(landing.toString)
   }
 
   /** Embedding ingest stream over the staged fixture — the front of
@@ -271,8 +260,7 @@ object Streams {
     * like [[docStream]]: vectors carry no event time). */
   private[streaming] def embStream(s: SparkSession, dir: String): DataFrame = {
     val landing = stageLanding(dir, "embeddings")
-    val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
-    s.readStream.schema(schema).parquet(landing.toString)
+    s.readStream.schema(T.schema(s, s"$dir/embeddings.parquet")).parquet(landing.toString)
   }
 
   val qs: Seq[Q] = Seq(

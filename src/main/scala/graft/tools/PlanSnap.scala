@@ -7,7 +7,9 @@ import org.apache.spark.sql.execution.ExplainMode
   * checks plan claims (Exchange count, join strategy, PushedFilters/
   * ReadSchema) against these files, so they are produced by a tool
   * with the BENCH session's exact config (master width, shuffle
-  * partitions, union-partitioning guard), not a one-off REPL.
+  * partitions, union-partitioning guard), not a one-off REPL. The
+  * header gives the number of Spark jobs the query ran while it was
+  * being built (`construction jobs: N`), then each job's call site.
   *
   * Usage:
   *   runMain graft.tools.PlanSnap <suffix> <outDir> <sfDir> qNN[,qNN...]
@@ -30,12 +32,14 @@ object PlanSnap {
         .find(k => k == q || k.takeWhile(_ != '_') == q)
         .getOrElse(sys.error(s"unknown query $q"))
       val short = full.takeWhile(_ != '_')
-      val df = graft.SparkEntry.queries(full)(spark, sfDir)
+      // the jobs the query runs while it is built belong to its work
+      // as much as the final plan does
+      val (df, jobs) = graft.core.Jobs.during(spark)(graft.SparkEntry.queries(full)(spark, sfDir))
       val txt = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
       val p = java.nio.file.Paths.get(outDir, s"${short}_$suffix.txt")
-      java.nio.file.Files.write(p,
-        (s"== $full @ $sfDir (local[$cpus]) ==\n" + txt)
-          .getBytes("UTF-8"))
+      val header = (s"== $full @ $sfDir (local[$cpus]) ==" +:
+        s"construction jobs: ${jobs.size}" +: jobs.map("  " + _)).mkString("", "\n", "\n")
+      java.nio.file.Files.write(p, (header + txt).getBytes("UTF-8"))
       System.err.println(s"wrote $p")
     }
     graft.Caches.releaseAll(spark)
